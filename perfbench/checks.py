@@ -1,73 +1,24 @@
 """Output checks, run outside every timed span.
 
-Catalog entries are compared with their DuckDB ``oracle_sql`` over the
-same snapshot: column names, row count, and a hash of the canonical
-rows. Canonical form is the engine's parity-test rule (sorted column
-names; per cell NULL / NaN / integral floats as ints / other floats as
-``repr(round(v, 9))``; rows sorted), so a mismatch here is a mismatch
-the repository's own oracle tests would report.
+Catalog entries go through the repository's own oracle gate,
+``tests/oracle_harness.py``: column names, row count and the canonical
+rows against the entry's DuckDB ``oracle_sql`` over the same snapshot,
+plus the gate's refusal of non-scalar cells and of HUGEINT oracle
+columns. Panels and streamed totals have no oracle of their own; they
+are compared as row sets with a float tolerance (``rows_close``).
 """
 
 from __future__ import annotations
 
-import hashlib
 import math
 
-import duckdb
-
-from gen import TABLES
+from tests.oracle_harness import compare
 
 
-def duck(snapshot_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.execute("SET threads TO 2")
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{snapshot_dir}/{name}.parquet'"
-        )
-    return con
-
-
-def _cell(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(round(v, 9))
-    return str(v)
-
-
-def digest(columns: list[str], rows) -> tuple[list[str], int, str]:
-    """(sorted column names, row count, sha256 of the canonical rows)."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    canon = sorted(tuple(_cell(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for row in canon:
-        h.update("\x1f".join(row).encode())
-        h.update(b"\x1e")
-    return [columns[i] for i in order], len(canon), h.hexdigest()
-
-
-def oracle_mismatch(df, con, sql: str, rows=None) -> str | None:
-    """None when the Spark frame (or its already collected ``rows``)
-    matches the oracle, else a reason."""
-    if rows is None:
-        rows = [tuple(r) for r in df.collect()]
-    got = digest(df.columns, rows)
-    res = con.sql(sql)
-    want = digest(res.columns, res.fetchall())
-    if got[0] != want[0]:
-        return f"columns {got[0]} != oracle {want[0]}"
-    if got[1] != want[1]:
-        return f"{got[1]} rows != oracle {want[1]}"
-    if got[2] != want[2]:
-        return "row values differ from the oracle"
-    return None
+def oracle_mismatch(df, con, sql: str) -> str | None:
+    """None when the Spark frame passes the oracle gate, else its issues."""
+    report = compare(df, con, sql)
+    return None if report["ok"] else "; ".join(report["issues"])[:500]
 
 
 def rows_close(got, want, rel: float = 1e-9) -> bool:
@@ -77,7 +28,7 @@ def rows_close(got, want, rel: float = 1e-9) -> bool:
         return False
 
     def key(r):
-        return tuple(_cell(v) if not isinstance(v, float) else "" for v in r)
+        return tuple((v is None, "" if isinstance(v, float) else str(v)) for v in r)
 
     for a, b in zip(sorted(got, key=key), sorted(want, key=key)):
         for x, y in zip(a, b):
@@ -87,6 +38,6 @@ def rows_close(got, want, rel: float = 1e-9) -> bool:
                         return False
                 elif not math.isclose(x, y, rel_tol=rel, abs_tol=1e-9):
                     return False
-            elif _cell(x) != _cell(y):
+            elif x != y:
                 return False
     return True

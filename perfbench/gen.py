@@ -3,9 +3,13 @@
 Every input the program sees is made here from ``--seed``: the same seed
 gives byte-identical parquet files. The shapes follow the engine's
 snapshot contract (``sources/tables.py``: ten tables, one parquet file
-each) and the reference's payload footprint (BASELINE.md: ~31 Nambu PV
-plant-units, ~25 Namdong wind plants, 43 ASOS weather stations, 24 rows
-per plant-day).
+each, ``events.ts`` stored as parquet TIMESTAMP(NANOS), which the
+loaders read as int64 and rebuild as TIMESTAMP_NTZ, so time windows
+push down in the raw nanos domain), the streaming landing zone's
+contract (``streaming.incremental.EVENT_STREAM_SCHEMA``: ``ts`` as
+TIMESTAMP_NTZ) and the reference's payload footprint (BASELINE.md: ~31
+Nambu PV plant-units, ~25 Namdong wind plants, 43 ASOS weather
+stations, 24 rows per plant-day).
 """
 
 from __future__ import annotations
@@ -18,18 +22,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from energy_data_pipeline_spark.sources.tables import TABLE_NAMES
 
 EVENT_TYPES = np.array(["signup", "purchase", "view", "click", "error"])
 EVENTS_START = dt.datetime(2024, 1, 1)
@@ -109,7 +102,7 @@ def _events(rng, first_id: int, day0: int, n_days: int, n: int, n_users: int) ->
     return pa.table(
         {
             "event_id": np.arange(first_id, first_id + n, dtype=np.int64),
-            "ts": pa.array(ts, pa.timestamp("us")),
+            "ts": pa.array(ts.astype("datetime64[ns]"), pa.timestamp("ns")),
             "user_id": rng.integers(0, n_users, n).astype(np.int64),
             "event_type": EVENT_TYPES[rng.integers(0, 5, n)],
             "value": np.round(rng.exponential(50.0, n), 2),
@@ -278,10 +271,11 @@ class Snapshot:
         plus ``tick`` cumulative increments, each one more event day and
         ~2% more documents. Unchanged tables are hard links to the
         base snapshot. Also writes this tick's landed payloads
-        (``pv_wide``, ``wind_wide``, ``asos``, ``events_increment``)
-        under ``out_dir/landed``."""
+        (``pv_wide``, ``wind_wide``, ``asos``, and the day's events in
+        the stream's landing shape, ``events_increment``) under
+        ``out_dir/landed``."""
         os.makedirs(os.path.join(out_dir, "landed"), exist_ok=True)
-        for name in TABLES:
+        for name in TABLE_NAMES:
             if name not in ("events", "documents"):
                 os.link(
                     os.path.join(base_dir, f"{name}.parquet"),
@@ -310,9 +304,19 @@ class Snapshot:
         _write(pa.concat_tables(ev_parts), os.path.join(out_dir, "events.parquet"))
         _write(pa.concat_tables(doc_parts), os.path.join(out_dir, "documents.parquet"))
         landed = os.path.join(out_dir, "landed")
-        _write(inc, os.path.join(landed, "events_increment.parquet"))
+        write_landing(inc, os.path.join(landed, "events_increment.parquet"))
         day = (EVENTS_START + dt.timedelta(days=EVENT_DAYS + tick - 1)).date()
         write_payloads(seed, f"tick{tick}", day, landed)
+
+
+def write_landing(events: pa.Table, path: str) -> None:
+    """Events as they land for the stream: the columns of
+    ``EVENT_STREAM_SCHEMA``, ``ts`` as parquet TIMESTAMP(MICROS) not
+    adjusted to UTC, which Spark reads as TIMESTAMP_NTZ."""
+    cols = ("event_id", "ts", "user_id", "event_type", "value")
+    t = events.select(cols)
+    ts = t.column("ts").cast(pa.timestamp("us"))
+    _write(t.set_column(1, "ts", ts), path)
 
 
 def write_payloads(seed: int, stream: str, day: dt.date, out_dir: str) -> None:

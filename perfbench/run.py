@@ -38,64 +38,16 @@ CONFS = (
     "spark.sql.adaptive.enabled",
     "spark.default.parallelism",
 )
-E2E_UNITS = {
-    "setup_s": "s",
-    "query_p50_s": "s",
-    "query_p90_s": "s",
-    "queries_per_s": "1/s",
-    "refresh_s": "s",
-    "cold_read_s": "s",
-    "mem_mb": "MiB",
-}
-LAYER_UNITS = {
-    "session.start_s": "s",
-    "session.warmup_s": "s",
-    "plans.build_s": "s",
-    "plans.pinned_mb": "MiB",
-    "plans.exchanges": "count",
-    "plans.smj_joins": "count",
-    "plans.nlj_joins": "count",
-    "plans.windows": "count",
-    "plans.sorts": "count",
-    "plans.python_nodes": "count",
-    "sources.input_mb": "MiB",
-    "sources.input_rows": "count",
-    "exec.jobs": "count",
-    "exec.stages": "count",
-    "exec.stages_skipped": "count",
-    "exec.tasks": "count",
-    "exec.critical_path_s": "s",
-    "exec.floor_s": "s",
-    "exec.run_s": "s",
-    "exec.cpu_s": "s",
-    "exec.shuffle_read_mb": "MiB",
-    "exec.shuffle_write_mb": "MiB",
-    "exec.spill_mb": "MiB",
-    "python.run_s": "s",
-    "python.start_s": "s",
-    "python.sent_mb": "MiB",
-    "python.returned_mb": "MiB",
-    "jobs.pv_ingest_s": "s",
-    "jobs.wind_ingest_s": "s",
-    "jobs.weather_etl_s": "s",
-    "jobs.dashboard_refresh_s": "s",
-    "jobs.corpus_refresh.gate_s": "s",
-    "jobs.corpus_refresh.purge_s": "s",
-    "jobs.corpus_refresh.mixture_s": "s",
-    "jobs.corpus_refresh.pack_plan_s": "s",
-    "jobs.retries": "count",
-    "jobs.failed_tasks": "count",
-    "sinks.bytes_written_mb": "MiB",
-    "sinks.files_written": "count",
-    "sinks.bytes_per_row": "B",
-    "sinks.manifest_commits": "count",
-    "streaming.rollup_s": "s",
-    "streaming.batches": "count",
-}
-OVERHEAD_METRICS = ("setup_s", "queries_per_s", "cold_read_s")
-LAYER_UNITS.update(
-    {f"tracing.overhead_{k}": ("1/s" if k == "queries_per_s" else "s") for k in OVERHEAD_METRICS}
-)
+OVERHEAD = "tracing.overhead_"
+
+
+def declared_metrics() -> tuple[dict[str, str], dict[str, str]]:
+    """(end-to-end, per-layer) metric names and units, as BENCHMARK.json
+    declares them."""
+    with open(os.path.join(ROOT, "BENCHMARK.json"), encoding="utf-8") as f:
+        spec = json.load(f)
+    units = lambda key: {m["name"]: m["unit"] for m in spec[key]}  # noqa: E731
+    return units("end_to_end"), units("per_layer")
 
 
 def cpu_probe() -> float:
@@ -193,9 +145,11 @@ def _stop(spark) -> None:
 
 def main(argv=None) -> int:
     args = _args(argv)
-    if not os.path.isdir(os.path.join(ROOT, "energy_data_pipeline_spark")):
+    if not os.path.isdir(os.path.join(ROOT, "energy_data_pipeline_spark")) or not os.path.isfile(
+        os.path.join(ROOT, "BENCHMARK.json")
+    ):
         print(
-            f"perfbench: no energy_data_pipeline_spark package under {ROOT}; "
+            f"perfbench: no energy_data_pipeline_spark package or BENCHMARK.json under {ROOT}; "
             "run from the root of a full checkout",
             file=sys.stderr,
         )
@@ -256,7 +210,6 @@ def _run(args, work: str, out_dir: str) -> int:
     # what a traced set-up collected, kept apart from the measured work
     setup_layers = run.layers.copy()
     run.layers.clear()
-    untraced_setup_s = setup_span.seconds - run.trace_s
     try:
         confs = {k: spark.conf.get(k, None) for k in CONFS}
         confs["spark.master"] = spark.sparkContext.master
@@ -265,9 +218,7 @@ def _run(args, work: str, out_dir: str) -> int:
         result = {"setup_s": setup_span.seconds, "cold_read_s": prep.get("cold_read_s")}
         result |= wl.measure(run, args.seconds)
         if args.trace:
-            untraced = {"setup_s": untraced_setup_s, "cold_read_s": prep.get("untraced_cold_read_s")}
-            layers = _layers(run, result, untraced | result["untraced"], setup_layers,
-                             sp_start.seconds, sp_warm.seconds)
+            layers = _layers(run, result, setup_layers, sp_start.seconds, sp_warm.seconds)
         jvm_live = jvm_live_mb(spark)
         jvm_hwm = vm_hwm_mb(spark.sparkContext._gateway.proc.pid)
         entry_bad, pipeline_bad = wl.check(run)
@@ -281,13 +232,20 @@ def _run(args, work: str, out_dir: str) -> int:
     result["mem_mb"] = sum(jvm_live) + py_hwm
     diag.update(jvm_vmhwm_mb=jvm_hwm, python_vmhwm_mb=py_hwm, jvm_heap_live_mb=jvm_live[0],
                 jvm_nonheap_mb=jvm_live[1])
-    diag.update(calibration_end_s=cpu_probe(), loadavg_end=os.getloadavg())
+    diag.update(calibration_end_s=cpu_probe(), loadavg_end=os.getloadavg(), collector_s=run.trace_s)
 
     attempted, failed, failing = _accounting(result, wl.checked, entry_bad, pipeline_bad)
+    e2e_units, layer_units = declared_metrics()
+    end_to_end = {k: result[k] for k in e2e_units}
     if args.trace:
-        metrics = {k: {"value": layers[k], "unit": u} for k, u in LAYER_UNITS.items()}
+        layers |= _overhead(out_dir, args, end_to_end)
+        metrics = {k: {"value": layers[k], "unit": u} for k, u in layer_units.items() if k in layers}
+        missing = [k for k in layer_units if k not in layers]
+        if missing:
+            print(f"perfbench: no untraced record of this workload yet, so no {', '.join(missing)}",
+                  file=sys.stderr)
     else:
-        metrics = {k: {"value": result[k], "unit": u} for k, u in E2E_UNITS.items()}
+        metrics = {k: {"value": v, "unit": e2e_units[k]} for k, v in end_to_end.items()}
     record = {
         "workload": args.workload,
         "seed": args.seed,
@@ -297,13 +255,13 @@ def _run(args, work: str, out_dir: str) -> int:
         "confs": confs,
         "diagnostics": diag,
         "setup": {"session_start_s": sp_start.seconds, "session_warmup_s": sp_warm.seconds, **prep},
-        "end_to_end": {k: result[k] for k in E2E_UNITS},
+        "end_to_end": end_to_end,
         "failed_ratio": failed / attempted,
         "failing": failing,
         "families": _families(result["samples"]),
         "samples": result["samples"],
         "ticks": [
-            {k: t[k] for k in ("tick", "steps", "refresh_s", "cold_read_s", "cold_read_passes_s",
+            {k: t[k] for k in ("tick", "steps", "refresh_s", "cold_read_s", "cold_read_passes_s", "first_touch_s",
                                "version", "commits", "batches", "error")}
             | {"flow": {n: vars(r) for n, r in t["flow"]["tasks"].items()} if t.get("flow") else None}
             for t in result.get("ticks", [])
@@ -358,25 +316,45 @@ def _families(samples: list[dict]) -> dict[str, dict[str, float]]:
     return out
 
 
-def _layers(run, result, untraced, setup_layers, start_s: float, warm_s: float) -> dict[str, float]:
+def _overhead(out_dir: str, args, traced: dict[str, float]) -> dict[str, float]:
+    """Tracing overhead of each end-to-end metric: this traced run's
+    value minus the untraced run's value, for the same workload and
+    ``--seconds``. The untraced run of the same seed is preferred, else
+    the latest untraced run; with none, nothing is reported."""
+    same = os.path.join(out_dir, f"{args.workload}-seed{args.seed}-trace0.json")
+    records = [same] if os.path.isfile(same) else []
+    if not records:
+        prefix = f"{args.workload}-seed"
+        records = sorted(
+            (os.path.join(out_dir, f) for f in os.listdir(out_dir)
+             if f.startswith(prefix) and f.endswith("-trace0.json")),
+            key=os.path.getmtime,
+            reverse=True,
+        )
+    for path in records:
+        with open(path, encoding="utf-8") as f:
+            rec = json.load(f)
+        if rec.get("seconds") == args.seconds and set(traced) <= set(rec.get("end_to_end", {})):
+            return {f"{OVERHEAD}{k}": v - rec["end_to_end"][k] for k, v in traced.items()}
+    return {}
+
+
+def _layers(run, result, setup_layers, start_s: float, warm_s: float) -> dict[str, float]:
     """Per-layer metrics of the traced run. Status-store counters of the
     measured work are per unit of work: per served call on serve_warm,
     per tick (its refresh plus its cold reads) on refresh_cold.
     ``python.start_s`` is the run's total, set-up included: workers are
-    reused, so they start in the warm-up. The tracing overhead of an
-    end-to-end metric is its traced value minus its value without the
-    collector's own time; the collector runs between public calls, so
-    call latencies and refresh ticks never contain it."""
+    reused, so they start in the warm-up. The ``tracing.overhead_*``
+    metrics are left to ``_overhead``."""
     L = run.layers
     ticks = result.get("ticks", [])
     per = len(ticks) or len(result["samples"])
-    out = {k: float(L.get(k, 0.0)) / per for k in LAYER_UNITS}
+    names = [k for k in declared_metrics()[1] if not k.startswith(OVERHEAD)]
+    out = {k: float(L.get(k, 0.0)) / per for k in names}
     out["session.start_s"] = start_s
     out["session.warmup_s"] = warm_s
     out["python.start_s"] = setup_layers["python.start_s"] + L["python.start_s"]
     out["plans.pinned_mb"] = run.collector.pinned_mb()
-    for k in OVERHEAD_METRICS:
-        out[f"tracing.overhead_{k}"] = result[k] - untraced[k]
     rows = L.get("sinks.rows_written", 0.0)
     out["sinks.bytes_per_row"] = L["sinks.bytes_written_mb"] * 2**20 / rows if rows else 0.0
     for t in ticks:
