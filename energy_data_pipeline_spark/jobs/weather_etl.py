@@ -29,22 +29,27 @@ def weather_etl_job(
     merge_to_all.py's keep-last dedup."""
     before_row = impute_stats(raw_df, list(value_cols)).collect()[0]
     before = {f"{c}_nulls_before": before_row[f"{c}_nulls"] for c in value_cols}
+    # persist: the after-stats would otherwise re-run the whole impute
+    # DAG, spline applyInPandas pass included, that the upsert just ran
     imputed = impute_missing_values(
         raw_df,
         ts_col=ts_col,
         value_cols=list(value_cols),
         keys=[station_col],
         short_gap_max=short_gap_max,
-    )
-    n = upsert(
-        imputed.sparkSession,
-        imputed,
-        table_path,
-        keys=[station_col, ts_col],
-    )
-    # after-stats on the SAME batch the before-stats measured, so the
-    # pair is comparable (the accumulated table may hold older nulls)
-    after_row = impute_stats(imputed, list(value_cols)).collect()[0]
+    ).persist()
+    try:
+        n = upsert(
+            imputed.sparkSession,
+            imputed,
+            table_path,
+            keys=[station_col, ts_col],
+        )
+        # after-stats on the SAME batch the before-stats measured, so the
+        # pair is comparable (the accumulated table may hold older nulls)
+        after_row = impute_stats(imputed, list(value_cols)).collect()[0]
+    finally:
+        imputed.unpersist()
     stats = {"rows_in_table": n}
     stats.update(before)
     for c in value_cols:

@@ -12,6 +12,15 @@ Scale posture (100 TB target):
   coalesces from an intentionally high initial number.
 - dynamic partition overwrite: the K4 idempotent range-overwrite protocol
   relies on it (see sinks/writers.py).
+
+Call-site capture is off (``spark.python.sql.dataFrameDebugging.enabled``
+= false, a static conf). With it on, PySpark wraps every Column and
+DataFrame method so that each call also costs about five py4j round trips
+(active-session lookup, JVM class lookup, conf read, origin set and clear)
+plus a Python stack walk; that was about two thirds of the driver's round
+trips when building a cold catalog entry. The trade-off: a runtime error's
+"DataFrame query context" no longer names the Python line that built the
+failing expression. The exception type and Spark's message are unchanged.
 """
 
 from __future__ import annotations
@@ -50,6 +59,7 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()

@@ -6,13 +6,26 @@ events documents embeddings — one parquet file per table under an sf dir.
 At 100 TB these would be partitioned/bucketed managed tables; the loaders
 keep the access path declarative (``spark.read.parquet``) so Catalyst gets
 predicate pushdown, column pruning and partition pruning for free.
+
+Each table's inferred schema is memoized: without a schema, every
+``spark.read.parquet`` runs a one-task Spark job to read footers, and one
+dashboard pass reads the same ``events.parquet`` eight times. The memo
+key is the absolute path plus the file's ``st_mtime_ns`` and ``st_size``
+(every file's, for a directory) plus the session confs that change what
+inference returns, so a rewritten file or a conf flip infers again. It is
+keyed by path, not inode: a new snapshot path (a hard-linked copy
+included) pays one inference, as a real new snapshot would.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TABLE_NAMES = (
     "region",
@@ -34,6 +47,62 @@ TABLE_NAMES = (
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+# session confs whose value changes the schema parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+# LRU-bounded: a long-lived service sees a new snapshot path per refresh
+_MAX_SCHEMAS = 256
+_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _file_token(path: str) -> tuple:
+    """(mtime_ns, size) of a file; of every file under a directory."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            f = os.path.join(root, n)
+            st = os.stat(f)
+            files.append((os.path.relpath(f, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with nanosAsLong on and the inferred
+    schema memoized (module docstring); a missing path reads uncached so
+    Spark raises its own error."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        token = _file_token(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        token,
+        *(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = df.schema
+        while len(_SCHEMAS) > _MAX_SCHEMAS:
+            _SCHEMAS.popitem(last=False)
+    return df
+
+
 def _nanos_to_ntz(col: str):
     micros = (F.col(col) / F.lit(1000)).cast("long")
     epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
@@ -43,8 +112,7 @@ def _nanos_to_ntz(col: str):
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col in _NANOS_TS_COLS.get(name, ()):
         if isinstance(df.schema[col].dataType, LongType):
             df = df.withColumn(col, _nanos_to_ntz(col))
@@ -75,8 +143,7 @@ def load_events_window(
         d = _dt.datetime.strptime(s, fmt)
         return int((d - _dt.datetime(1970, 1, 1)).total_seconds()) * 1_000_000_000
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, LongType):
         if start is not None:
             df = df.filter(F.col("ts") >= F.lit(_nanos(start)))

@@ -214,3 +214,28 @@ def test_pair_cosines_empty_and_singleton_groups(spark):
     norms = np.array([2.0])
     ii, jj = np.triu_indices(1, 1)
     assert _pair_cosines(V, norms, ii, jj).size == 0
+
+
+@pytest.mark.parametrize("n_rows,kernel", [(19_595, False), (19_596, True)])
+def test_near_dup_pairs_size_gate(spark, n_rows, kernel):
+    """Plan-only: cosine_near_dup_pairs runs the expression self-join
+    below the ~3M expected-pair gate and the Arrow kernel at it."""
+    import re
+
+    from energy_data_pipeline_spark.operators.similarity import cosine_near_dup_pairs
+    from energy_data_pipeline_spark.sources.tables import load_table
+
+    pins: list = []
+    df = cosine_near_dup_pairs(
+        load_table(spark, SF_DIR, "embeddings"), pins_out=pins, n_rows=n_rows
+    )
+    try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for pinned, _level in pins:
+            pinned.unpersist()
+    python_nodes = re.findall(
+        r"(?:BatchEvalPython|ArrowEvalPython|FlatMapGroupsIn\w+|MapInPandas|MapInArrow)",
+        plan,
+    )
+    assert bool(python_nodes) == kernel, plan
